@@ -16,12 +16,23 @@ import org.apache.spark.sql.SparkSession
   * tightens the per-query min the headline is built from.
   */
 object Bench {
+  /** `SPARK_GRAFT_CPUS` (default 4) as a positive Int — the local
+    * master's core count and shuffle parallelism of Bench and Verify.
+    * Any other value fails at startup instead of reaching the session
+    * or the JSON line as a raw string. */
+  private[graft] def envCpus(): Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => 4
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = envCpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

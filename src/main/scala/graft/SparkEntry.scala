@@ -268,8 +268,8 @@ object SparkEntry {
     * they agree only because no gate-corpus shingle exceeds df 100
     * (max observed 25), a precondition GraftCoreSpec re-asserts on
     * every corpus ("ngram oracle precondition"). Production callers
-    * get the scale pipeline by default (Dedup.keepList /
-    * Graft.dedupKeepList). */
+    * get the scale pipeline by default (Dedup.keepList's
+    * exact = false). */
   def qDedupKeeplist(s: SparkSession, d: String): DataFrame =
     Dedup.keepList(Tables.documents(s, d), "doc_id", "text",
       n = 3, threshold = 0.8, maxDf = 100, exact = true)

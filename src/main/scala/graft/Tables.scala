@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fns
+
 /** Loaders for the driver-generated TPC-H-ish tables plus the EAV
   * feature-record view derived from `events`.
   *
@@ -26,13 +28,13 @@ object Tables {
     * reusable: hash(orderkey) already satisfies the orderkey
     * joins/aggregates downstream, hash(user_id) the per-user windows
     * — so for many queries this REPLACES their first exchange rather
-    * than adding one. */
+    * than adding one. The test and the exchange's count both come
+    * from [[Fns.shufflePartitions]]. */
   private def splitCompensated(s: SparkSession, raw: DataFrame,
-                               key: String): DataFrame = {
-    val target = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    if (raw.rdd.getNumPartitions < target) raw.repartition(target, col(key))
+                               key: String): DataFrame =
+    if (raw.rdd.getNumPartitions < Fns.shufflePartitions(s))
+      Fns.pinnedRepartition(raw, col(key))
     else raw
-  }
 
   def lineitem(s: SparkSession, d: String): DataFrame =
     splitCompensated(s, load(s, d, "lineitem"), "l_orderkey")

@@ -218,6 +218,23 @@ object Bpe {
     trainBatchedFromCounts(corpusWordCounts(docs, idCol, textCol),
       nMerges, minPairCount, maxBatch, progress)
 
+  /** Below this many merges the sequential trainer wins (2 cheap jobs
+    * per merge); above it the batched trainer's ~10x fewer rounds do —
+    * the measured crossover is a few hundred merges (SCALE_NOTES
+    * round 8). */
+  private val BatchedMinMerges = 200
+
+  /** Train from a (word, cnt) table with whichever exact trainer is
+    * cheaper for `nMerges` — [[trainFromCounts]] below
+    * `BatchedMinMerges`, [[trainBatchedFromCounts]] from it on. Both
+    * learn identical rules; a corpus trains through
+    * `trainAutoFromCounts(corpusWordCounts(docs, idCol, textCol), …)`. */
+  def trainAutoFromCounts(wordCounts: DataFrame, nMerges: Int,
+                          minPairCount: Long = 2L): BpeModel =
+    if (nMerges < BatchedMinMerges)
+      trainFromCounts(wordCounts, nMerges, minPairCount)
+    else trainBatchedFromCounts(wordCounts, nMerges, minPairCount)._1
+
   /** [[trainBatched]] over a pre-computed (word, cnt) table. */
   def trainBatchedFromCounts(wordCounts: DataFrame, nMerges: Int,
                              minPairCount: Long = 2L,
@@ -788,12 +805,8 @@ object Bpe {
     import graft.offline.VersionedStore
     val p = VersionedStore.read(spark, vocabParamsTable(root)).head()
     val (nMerges, minPc) = (p.getLong(0).toInt, p.getLong(1))
-    val counts = storeCounts(spark, root)
-    // same dispatch as Graft.bpeTrain: sequential below the measured
-    // batching crossover, exact-batched above it
-    val model =
-      if (nMerges < 200) trainFromCounts(counts, nMerges, minPc)
-      else trainBatchedFromCounts(counts, nMerges, minPc)._1
+    val model = trainAutoFromCounts(storeCounts(spark, root), nMerges,
+      minPc)
     VersionedStore.overwrite(model.rules, vocabRulesTable(root))
     VersionedStore.overwrite(model.wordPieces, vocabSegsTable(root))
   }

@@ -64,6 +64,25 @@ object LinkGraph {
                      massMicro: Long = 1000000000000L): DataFrame =
     run(edges, Some(seeds), nIter, dampingPct, massMicro)
 
+  /** Trust-budgeted data selection: TrustRank host scores joined onto
+    * per-doc token counts, then the prefix-sum budget cut spends
+    * `budgetTokens` on the most-trusted hosts first. `docs` carries
+    * (idCol, hostCol, tokensCol); returns (doc_id, score = trust
+    * micro-units, n_tokens, cum_tokens). */
+  def trustSelect(edges: DataFrame, seeds: DataFrame, docs: DataFrame,
+                  idCol: String, hostCol: String, tokensCol: String,
+                  budgetTokens: Long, nIter: Int = 5): DataFrame = {
+    val trust = trustRankMicro(edges, seeds, nIter)
+    // LEFT join + trust 0: a doc whose host never appears in the edge
+    // graph scores zero (same as a host no seed endorses) and stays
+    // eligible for leftover budget — an inner join would silently
+    // drop off-graph documents from selection entirely
+    FeatureEng.selectToBudget(
+      docs.join(trust, docs(hostCol) === trust("node"), "left_outer"),
+      idCol, coalesce(trust("pr_micro"), lit(0L)), docs(tokensCol),
+      budgetTokens)
+  }
+
   private def run(edges: DataFrame, seedsOpt: Option[DataFrame],
                   nIter: Int, dampingPct: Int,
                   massMicro: Long): DataFrame = {

@@ -38,7 +38,7 @@ import graft.functions.Fns
   * the previous decimal(38,6) accumulation, but the aggregate buffer
   * is a codegen long instead of a per-row BigDecimal — measured 8.8
   * → 5.6 s on the 6.8M-row cosine dot aggregate and 4.2 → 3.1 s on
-  * the BM25 score aggregate at sf0.1 (round-15 RetrievalProbe2,
+  * the BM25 score aggregate at sf0.1 (OPTIMIZATION_r15.md §1,
   * zero row diff). Domain bound: a group's micro sum must stay
   * under 2^53 for the exact double conversion (score mass ≤ 9e9 per
   * (query, doc) — far above any real score; same 2^53 contract as
@@ -46,20 +46,20 @@ import graft.functions.Fns
   */
 object Search {
 
-  /** Exact integer micros of `round(x, 6)` for a NON-NEGATIVE double
-    * column with x < 1e5 away from ties — value-identical to
+  /** Exact integer micros of `round(x, 6)` — value-identical to
     * `(round(x, 6) * 1e6 + 0.5).cast("long")` (the round-15 recovery
-    * identity) but BigDecimal-free on the hot path: Spark's `round`
-    * on a double runs `BigDecimal(Double.toString(x)).setScale(6,
+    * identity) for every double, but BigDecimal-free on the hot path
+    * (non-negative x < 1e4 away from ties): Spark's `round` on a
+    * double runs `BigDecimal(Double.toString(x)).setScale(6,
     * HALF_UP)` PER ROW, measured at ~40% of the fanned retrieval
-    * aggregates (round-15 RetrievalProbe2 variant C).
+    * aggregates (OPTIMIZATION_r15.md §1, probe variant C).
     *
     * Fast path: `floor(x·1e6 + 0.5)` in pure codegen double/long
-    * arithmetic. It is taken only when BOTH (a) x·1e6 < 1e10 and
-    * (b) the fractional part of x·1e6 is at least 1e-3 away from the
-    * 0.5 half-up tie; otherwise the exact BigDecimal expression runs
-    * (`when` short-circuits, so the slow branch never evaluates on
-    * fast rows). Identity proof outside the band: HALF_UP rounds the
+    * arithmetic. It is taken only when (a) x ≥ 0, (b) x·1e6 < 1e10
+    * and (c) the fractional part of x·1e6 is at least 1e-3 away from
+    * the 0.5 half-up tie; otherwise the exact BigDecimal expression
+    * runs (`when` short-circuits, so the slow branch never evaluates
+    * on fast rows). Identity proof outside the band: HALF_UP rounds the
     * SHORTEST-REPR decimal s of x with |s − x| ≤ ulp(x)/2, and the
     * two double ops (x·1e6, then +0.5) each add ≤ ulp/2 — for
     * x·1e6 < 1e10 the combined error is < 1e-5 micros, 100× inside
@@ -74,7 +74,10 @@ object Search {
     // floor() on a double returns LongType; the subtraction promotes
     // back to double, so tie is the distance to the half-up boundary
     val tie = abs(xm - floor(xm) - 0.5)
-    when(xm < 1e10 && tie > 1e-3, floor(xm + 0.5))
+    // negatives take the exact branch: the reference rounds half AWAY
+    // from zero and its cast truncates toward zero, which floor(xm +
+    // 0.5) does not reproduce (x = -1.2e-6: floor gives -1, ref 0)
+    when(xm >= 0 && xm < 1e10 && tie > 1e-3, floor(xm + 0.5))
       .otherwise((round(x, 6) * 1e6 + 0.5).cast("long"))
   }
 

@@ -4,14 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Fns
-import graft.operators.{LinkGraph, RangeJoin, Sketch}
+import graft.functions.{Fns, HllSketch}
+import graft.operators.{Bpe, Dedup, Doremi, Dsir, FeatureEng, FtClassify,
+  Kmeans, LinkGraph, MultiModal, RangeJoin, Sketch, Skew, TextAnalysis,
+  Unigram}
 
-/** The round-10/11 Graft facade surface: every sketch-store / join-
-  * planning / link-graph method delegates correctly (the thin-wrapper
-  * contract — equality with the operator call, or the operator's own
-  * invariant), so users never need `graft.operators.*` imports for
-  * the newest families.
+/** The LLM-data operator entry points as a caller uses them: sketch
+  * stores, join planning and execution, link graph, multimodal
+  * signatures, count stores, tokenizers, k-means and fastText stores.
+  * Each call spells out the (doc_id, text) / (vec_id, embedding)
+  * column names and the default dials a caller would pass, and each
+  * test checks the operator's own invariant — store == direct,
+  * retraction == never ingested, full probe == exact, and so on.
   */
 class FacadeSpec extends AnyFunSuite {
 
@@ -32,28 +36,32 @@ class FacadeSpec extends AnyFunSuite {
   // --- in-plan sketches ------------------------------------------------
 
   test("distinctEstimate / sliceOverlap / quantileEstimate delegate") {
-    val d = Graft.distinctEstimate(shingleStream, "shingle", Seq("source"))
+    val d = Sketch.hllDistinct(shingleStream, "shingle", Seq("source"))
     assert(d.columns.contains("hll_estimate") && d.count() > 0)
-    val o = Graft.sliceOverlap(shingleStream, "shingle", "source")
+    val o = Sketch.kmvOverlap(shingleStream, "shingle", "source", k = 64,
+      audit = false)
     assert(o.columns.toSeq === Seq("slice_a", "slice_b", "jaccard_est"),
       "production default must be the audit-free path")
     assert(o.count() > 0)
-    val q = Graft.quantileEstimate(
+    val q = Sketch.quantileSketch(
       docs.select(col("source"), col("doc_id"),
         length(col("text")).cast("double").as("v")),
-      "v", "doc_id", Seq("source"))
+      "v", "doc_id", Seq("source"), k = 256, qs = Seq(0.5, 0.95))
     assert(q.columns.contains("p50_sample") && q.count() > 0)
   }
 
   test("bloomTakedown and bloomBitset/bloomProbe agree (fast family)") {
     val d = docs.select(col("doc_id"), col("doc_id").cast("string").as("k"))
     val drops = d.filter(col("doc_id") % 7 === 0).select("k")
-    val joined = Graft.bloomTakedown(d, "k", drops, "k", mBits = 512)
+    val joined = Sketch.bloomMembership(d, "k", drops, "k", mBits = 512,
+        kHashes = 2, fast = true)
       .select(col("doc_id"), col("bloom_hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val bits = Graft.bloomBitset(drops, "k", mBits = 512)
+    val bits = Sketch.bloomBitsetLit(drops, "k", mBits = 512, kHashes = 2,
+      fast = true)
     val probed = d.select(col("doc_id"),
-        Graft.bloomProbe(bits, col("k"), mBits = 512).as("hit"))
+        Sketch.bloomProbe(bits, col("k"), mBits = 512, kHashes = 2,
+          fast = true).as("hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(probed === joined)
     assert(joined.values.count(identity) >= drops.count())
@@ -64,13 +72,13 @@ class FacadeSpec extends AnyFunSuite {
   test("sketchStore facade: build/upsert/read + takedown/rebuild") {
     val root = tmpRoot("fc-hll")
     val all = shingleStream.localCheckpoint(false)
-    Graft.sketchStoreBuild(
+    Sketch.buildSketchStore(
       all.filter(length(col("shingle")) % 2 === 0), "shingle",
-      Seq("source"), root)
-    assert(Graft.sketchStoreUpsert(
+      Seq("source"), root, HllSketch.DefaultP)
+    assert(Sketch.upsertSketches(
       all.filter(length(col("shingle")) % 2 === 1), "shingle",
       Seq("source"), root, "s1"))
-    val served = Graft.sketchStoreDistinct(spark, root, Seq("source"))
+    val served = Sketch.readDistinct(spark, root, Seq("source"))
       .collect().map(r => r.getAs[String]("source") ->
         r.getAs[Double]("hll_estimate")).toMap
     val direct = Sketch.mergeEstimate(
@@ -79,13 +87,13 @@ class FacadeSpec extends AnyFunSuite {
         r.getAs[Double]("hll_estimate")).toMap
     assert(served === direct)
     val victim = served.keys.min
-    assert(Graft.sketchTakedown(Seq(victim).toDF("source"), root,
+    assert(Sketch.registerTakedown(Seq(victim).toDF("source"), root,
       "hll", "t1"))
-    assert(!Graft.sketchStoreDistinct(spark, root, Seq("source"))
+    assert(!Sketch.readDistinct(spark, root, Seq("source"))
       .collect().map(_.getAs[String]("source")).contains(victim))
-    Graft.sketchStoreRebuild(all.filter(col("source") =!= victim),
+    Sketch.rebuildSketchStore(all.filter(col("source") =!= victim),
       "shingle", Seq("source"), root, "t1")
-    assert(Graft.sketchStoreDistinct(spark, root, Seq("source"))
+    assert(Sketch.readDistinct(spark, root, Seq("source"))
       .collect().map(r => r.getAs[String]("source") ->
         r.getAs[Double]("hll_estimate")).toMap === served - victim)
   }
@@ -93,26 +101,27 @@ class FacadeSpec extends AnyFunSuite {
   test("kmvStore / quantileStore facade round trips") {
     val all = shingleStream.localCheckpoint(false)
     val kroot = tmpRoot("fc-kmv")
-    Graft.kmvStoreBuild(all.filter(length(col("shingle")) % 2 === 0),
+    Sketch.buildKmvStore(all.filter(length(col("shingle")) % 2 === 0),
       "shingle", "source", kroot, k = 32)
-    assert(Graft.kmvStoreUpsert(
+    assert(Sketch.upsertKmv(
       all.filter(length(col("shingle")) % 2 === 1), "shingle", "source",
       kroot, "s1"))
-    val fromStore = Graft.kmvStoreOverlap(spark, kroot)
+    val fromStore = Sketch.readOverlap(spark, kroot)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getDouble(2)).toMap
-    val direct = Graft.sliceOverlap(all, "shingle", "source", k = 32)
+    val direct = Sketch.kmvOverlap(all, "shingle", "source", k = 32,
+        audit = false)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getDouble(2)).toMap
     assert(fromStore === direct)
     val qroot = tmpRoot("fc-qs")
     val vals = docs.select(col("source"), col("doc_id"),
       length(col("text")).cast("double").as("v")).localCheckpoint(false)
-    Graft.quantileStoreBuild(vals.filter(col("doc_id") % 2 === 0),
+    Sketch.buildQuantileStore(vals.filter(col("doc_id") % 2 === 0),
       "v", "doc_id", "source", qroot, k = 64)
-    assert(Graft.quantileStoreUpsert(vals.filter(col("doc_id") % 2 === 1),
+    assert(Sketch.upsertQuantileSample(vals.filter(col("doc_id") % 2 === 1),
       "v", "doc_id", "source", qroot, "s1"))
-    val served = Graft.quantileStoreRead(spark, qroot)
+    val served = Sketch.readQuantiles(spark, qroot, Seq(0.5, 0.95))
     assert(served.columns.contains("p95_sample") && served.count() > 0)
   }
 
@@ -122,18 +131,19 @@ class FacadeSpec extends AnyFunSuite {
       .select(col("o_custkey").cast("string").as("k")).localCheckpoint(false)
     val base = keys.filter(xxhash64(col("k")) % 2 === 0)
     val shard = keys.filter(xxhash64(col("k")) % 2 =!= 0)
-    Graft.cmStoreBuild(base, "k", root, depth = 3, width = 512)
-    assert(Graft.cmStoreUpsert(shard, "k", root, "s1"))
+    Sketch.buildCmStore(base, "k", root, depth = 3, width = 512,
+      fast = true)
+    assert(Sketch.upsertCm(shard, "k", root, "s1"))
     val probes = keys.distinct().select(col("k").as("probe_key"))
       .limit(20).localCheckpoint(false)
-    val est = Graft.cmStoreEstimates(spark, root, probes, "probe_key")
+    val est = Sketch.readCmEstimates(spark, root, probes, "probe_key")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val exact = keys.groupBy("k").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     est.foreach { case (k, e) =>
       assert(e >= exact.getOrElse(k, 0L), "CM must never undercount") }
-    assert(Graft.cmStoreRetract(shard, "k", root, "s1"))
-    val back = Graft.cmStoreEstimates(spark, root, probes, "probe_key")
+    assert(Sketch.retractCm(shard, "k", root, "s1"))
+    val back = Sketch.readCmEstimates(spark, root, probes, "probe_key")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val baseExact = base.groupBy("k").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -169,22 +179,22 @@ class FacadeSpec extends AnyFunSuite {
       .localCheckpoint(false)
 
     // broadcast_a: a is the small side
-    val ba = Graft.joinAuto(small2, "ak", big2, "bk", broadcastRows = 100)
+    val ba = Skew.joinAuto(small2, "ak", big2, "bk", broadcastRows = 100)
     assert(ba.strategy === "broadcast_a")
     assert(ba.df.collect().map(_.toSeq).toSet ===
       plainJoin(small2, "ak", big2, "bk"))
     // broadcast_b: b smaller than a
-    val bb = Graft.joinAuto(big, "ak", small, "bk", broadcastRows = 100)
+    val bb = Skew.joinAuto(big, "ak", small, "bk", broadcastRows = 100)
     assert(bb.strategy === "broadcast_b")
     assert(bb.df.collect().map(_.toSeq).toSet ===
       plainJoin(big, "ak", small, "bk"))
     // shuffle: both sides over the broadcast budget, no provable skew
-    val sh = Graft.joinAuto(big, "ak", big2, "bk", broadcastRows = 10)
+    val sh = Skew.joinAuto(big, "ak", big2, "bk", broadcastRows = 10)
     assert(sh.strategy === "shuffle")
     assert(sh.df.collect().map(_.toSeq).toSet ===
       plainJoin(big, "ak", big2, "bk"))
     // shuffle_salted: the hot side trips the skew rule
-    val ss = Graft.joinAuto(hot, "ak", big2, "bk", broadcastRows = 10,
+    val ss = Skew.joinAuto(hot, "ak", big2, "bk", broadcastRows = 10,
       skewFactor = 4)
     assert(ss.strategy === "shuffle_salted")
     assert(ss.df.collect().map(_.toSeq).toSet ===
@@ -202,7 +212,7 @@ class FacadeSpec extends AnyFunSuite {
       .select(when(col("id") % 2 === 0, lit(9L)).otherwise(col("id"))
         .as("bk"), col("id").as("bv"))
       .localCheckpoint(false)
-    val r = Graft.joinAuto(flat, "ak", hotB, "bk", broadcastRows = 10,
+    val r = Skew.joinAuto(flat, "ak", hotB, "bk", broadcastRows = 10,
       skewFactor = 4)
     assert(r.strategy === "shuffle_salted")
     assert(r.df.collect().map(_.toSeq).toSet ===
@@ -215,7 +225,7 @@ class FacadeSpec extends AnyFunSuite {
     val a = spark.range(100).select(col("id").as("ak"))
       .filter(col("ak") < 0) // empty
     val b = spark.range(50).select(col("id").as("bk"))
-    val r = Graft.joinAuto(a, "ak", b, "bk")
+    val r = Skew.joinAuto(a, "ak", b, "bk")
     assert(r.strategy === "broadcast_a")
     assert(r.df.count() === 0L)
   }
@@ -235,16 +245,16 @@ class FacadeSpec extends AnyFunSuite {
       .createTempDirectory("cm_joinauto").toString + "/cm"
     // defaults match joinAuto's inline family (3 x 1024, fast)
     val (rBig, rSmall, rHot) = (root(), root(), root())
-    Graft.cmStoreBuild(big, "ak", rBig)
-    Graft.cmStoreBuild(small, "bk", rSmall)
-    Graft.cmStoreBuild(hot, "ak", rHot)
+    Sketch.buildCmStore(big, "ak", rBig, 3, 1024, fast = true)
+    Sketch.buildCmStore(small, "bk", rSmall, 3, 1024, fast = true)
+    Sketch.buildCmStore(hot, "ak", rHot, 3, 1024, fast = true)
     for (((a, ak, ra), (b, bk, rb), opts) <- Seq(
       ((big, "ak", rBig), (small, "bk", rSmall), (100L, 8L)),
       ((hot, "ak", rHot), (small.select(col("bk"), col("bv")), "bk",
         rSmall), (10L, 4L)))) {
-      val inline = Graft.joinAuto(a, ak, b, bk,
+      val inline = Skew.joinAuto(a, ak, b, bk,
         broadcastRows = opts._1, skewFactor = opts._2)
-      val stored = Graft.joinAutoFromStores(a, ak, b, bk, ra, rb,
+      val stored = Skew.joinAutoFromStores(a, ak, b, bk, ra, rb,
         broadcastRows = opts._1, skewFactor = opts._2)
       assert(stored.strategy === inline.strategy)
       assert(stored.joinSizeEst === inline.joinSizeEst)
@@ -255,24 +265,27 @@ class FacadeSpec extends AnyFunSuite {
     }
     // parameter-family mismatch is loud, not silently wrong
     val rNarrow = root()
-    Graft.cmStoreBuild(small, "bk", rNarrow, width = 512)
+    Sketch.buildCmStore(small, "bk", rNarrow, 3, width = 512, fast = true)
     val e = intercept[IllegalArgumentException](
-      Graft.joinAutoFromStores(big, "ak", small, "bk", rBig, rNarrow))
+      Skew.joinAutoFromStores(big, "ak", small, "bk", rBig, rNarrow))
     assert(e.getMessage.contains("depth, width, fast"))
   }
 
   test("joinPlan / cmSketch / cmFrequencies / saltedJoin delegate") {
     val a = spark.range(300).select(col("id").as("k"))
     val b = spark.range(900).select((col("id") % 300).as("k"))
-    val plan = Graft.joinPlan(Graft.cmSketch(a, "k"), Graft.cmSketch(b, "k"))
+    def sketch(df: DataFrame) =
+      Sketch.cmSketchRows(df, "k", 3, 1024, fast = true)
+    val plan = Sketch.cmJoinPlan(sketch(a), sketch(b), 5000L, 8L)
     assert(plan.count() === 1)
-    val freqs = Graft.cmFrequencies(Graft.cmSketch(b, "k"),
-      a.limit(10).select(col("k").as("probe_key")), "probe_key")
+    val freqs = Sketch.cmPointEstimate(sketch(b),
+      a.limit(10).select(col("k").as("probe_key")), "probe_key", 3, 1024,
+      fast = true)
     assert(freqs.collect().forall(_.getLong(1) >= 3L))
     val l = spark.range(200).select(col("id").as("lk"), col("id").as("lv"))
     val r = spark.range(600).select((col("id") % 200).as("rk"),
       col("id").as("rv"))
-    val salted = Graft.saltedJoin(l, "lk", r, "rk", salts = 4)
+    val salted = Skew.saltedJoin(l, "lk", r, "rk", salts = 4, saltCols = Nil)
       .select("lk", "lv", "rk", "rv")
       .collect().map(_.toSeq).toSet
     assert(salted === plainJoin(l, "lk", r, "rk"))
@@ -282,16 +295,13 @@ class FacadeSpec extends AnyFunSuite {
 
   test("pageRank / trustRank / trustSelect delegate") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
-    val pr = Graft.pageRank(edges, nIter = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pr === LinkGraph.pageRankMicro(edges, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val tr = Graft.trustRank(edges, Seq(1L).toDF("node"), nIter = 3)
+    val tr = LinkGraph.trustRankMicro(edges, Seq(1L).toDF("node"),
+        nIter = 3, dampingPct = 85)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(tr(4L) === 0L, "unendorsed host must hold zero trust")
     val d = docs.select(col("doc_id"), (col("doc_id") % 4 + 1).as("host"),
       size(split(col("text"), " ")).as("n_words"))
-    val sel = Graft.trustSelect(edges, Seq(1L).toDF("node"), d,
+    val sel = LinkGraph.trustSelect(edges, Seq(1L).toDF("node"), d,
       "doc_id", "host", "n_words", budgetTokens = 5000L)
     assert(sel.count() > 0)
     assert(sel.agg(max("cum_tokens")).head().getLong(0) <= 5000L)
@@ -300,7 +310,7 @@ class FacadeSpec extends AnyFunSuite {
     val dOff = docs.limit(20).select(col("doc_id"),
       (col("doc_id") % 4 + 100).as("host"), // hosts 100.. not in graph
       size(split(col("text"), " ")).as("n_words"))
-    val selOff = Graft.trustSelect(edges, Seq(1L).toDF("node"), dOff,
+    val selOff = LinkGraph.trustSelect(edges, Seq(1L).toDF("node"), dOff,
       "doc_id", "host", "n_words", budgetTokens = 100000L)
     assert(selOff.count() > 0, "off-graph docs must compete for budget")
     assert(selOff.agg(max("score")).head().getLong(0) === 0L)
@@ -312,10 +322,12 @@ class FacadeSpec extends AnyFunSuite {
     val ivs = spark.range(40).select(col("id").as("iv_id"),
       (col("id") * 11 % 350).as("lo"),
       (col("id") * 11 % 350 + col("id") % 25 + 1).as("hi"))
-    val manual = Graft.intervalJoin(pts, "t", ivs, "lo", "hi", bucket = 16)
+    val manual = RangeJoin.pointInInterval(pts, "t", ivs, "lo", "hi",
+        bucket = 16, keys = Nil)
       .select("pid", "iv_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val auto = Graft.intervalJoinAuto(pts, "t", ivs, "lo", "hi")
+    val auto = RangeJoin.pointInIntervalAuto(pts, "t", ivs, "lo", "hi",
+        keys = Nil)
       .select("pid", "iv_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto === manual && auto.nonEmpty)
@@ -324,14 +336,18 @@ class FacadeSpec extends AnyFunSuite {
   // --- round-10 text/report operators ----------------------------------
 
   test("minkScores / knScores / corpusReportKAnon / frameSamplePlan delegate") {
-    assert(Graft.minkScores(docs.limit(50)).columns
-      .contains("mink_score"))
-    assert(Graft.minkScores(docs.limit(50)).count() > 0)
-    val kn = Graft.knScores(docs.limit(50))
+    val mink = TextAnalysis.minkScore(docs.limit(50), "doc_id", "text", 0.2)
+    assert(mink.columns.contains("mink_score"))
+    assert(mink.count() > 0)
+    val kn = TextAnalysis.knBigramScore(docs.limit(50), "doc_id", "text",
+      0.75)
     assert(kn.columns.exists(_.contains("score")) && kn.count() > 0)
-    val card = Graft.corpusReportKAnon(docs, Seq("source", "lang"), k = 3)
+    val card = TextAnalysis.corpusReportKAnon(docs, "text", Seq("source", "lang"),
+      k = 3)
     assert(card.columns.contains("suppressed") && card.count() > 0)
-    val frames = Graft.frameSamplePlan(docs)
+    val frames = MultiModal.frameSampleByTime(
+      MultiModal.withPayload(docs, "doc_id", "text"), "doc_id", "payload",
+      intervalMs = 1000L, maxFrames = 16)
     assert(frames.count() >= 0) // text corpus: no media payloads is fine
   }
 
@@ -340,18 +356,22 @@ class FacadeSpec extends AnyFunSuite {
       graft.functions.SyntheticImage
         .syntheticImage(col("doc_id").cast("long"), col("text"))
         .as("payload"))
-    val sig = Graft.imagePHash(withPayload)
+    val sig = MultiModal.imagePHashSignatures(withPayload, "doc_id",
+      "payload")
     assert(sig.columns.toSeq === Seq("doc_id", "format", "width",
       "height", "arows", "ahash", "drows", "dhash"))
     assert(sig.count() > 0)
-    val pairs = Graft.imageNearDupPairs(withPayload, maxHamming = 2)
+    val pairs = MultiModal.imageNearDupPairs(withPayload, "doc_id", "payload",
+      maxHamming = 2)
     assert(pairs.columns.toSeq === Seq("doc_a", "doc_b", "hamming"))
     assert(pairs.count() >= 0)
-    val wide = Graft.imageNearDupPairsWide(withPayload, maxHamming = 2)
+    val wide = MultiModal.imageNearDupPairsWide(withPayload, "doc_id",
+      "payload", maxHamming = 2)
     assert(wide.columns.toSeq === Seq("doc_a", "doc_b", "hamming"))
     assert(wide.count() <= pairs.count()) // combined radius tightens
-    val manifest = Graft.imageKeepManifest(
-      withPayload.withColumn("status", lit(200)))
+    val manifest = MultiModal.imageKeepManifest(
+      withPayload.withColumn("status", lit(200)), "doc_id", "status",
+      "payload", minPixels = 128L, maxHamming = 2)
     assert(manifest.columns.toSeq ===
       Seq("doc_id", "status", "width", "height", "reason"))
     assert(manifest.count() == withPayload.count()) // every doc tagged
@@ -362,11 +382,13 @@ class FacadeSpec extends AnyFunSuite {
       graft.functions.SyntheticWav
         .syntheticWav(col("doc_id").cast("long"), col("text"))
         .as("payload"))
-    val sig = Graft.audioPHash(withPayload)
+    val sig = MultiModal.audioPHashSignatures(withPayload, "doc_id",
+      "payload")
     assert(sig.columns.toSeq === Seq("doc_id", "sample_rate",
       "channels", "n_samples", "arows", "ahash"))
     assert(sig.count() > 0)
-    val pairs = Graft.audioNearDupPairs(withPayload, maxHamming = 2)
+    val pairs = MultiModal.audioNearDupPairs(withPayload, "doc_id", "payload",
+      maxHamming = 2)
     assert(pairs.columns.toSeq === Seq("doc_a", "doc_b", "hamming"))
     assert(pairs.count() >= 0)
   }
@@ -376,27 +398,22 @@ class FacadeSpec extends AnyFunSuite {
       graft.functions.SyntheticVideo
         .syntheticVideo(col("doc_id").cast("long"), col("text"))
         .as("payload"))
-    val fh = Graft.videoFrameHashes(withPayload)
+    val fh = MultiModal.videoFrameHashes(withPayload, "doc_id", "payload",
+      maxFrames = 64)
     assert(fh.columns.toSeq === Seq("doc_id", "frame_idx", "ahash",
       "k1", "k2"))
     assert(fh.count() > 0)
-    val pairs = Graft.videoNearDupPairs(withPayload, minShared = 2L)
+    val pairs = MultiModal.videoNearDupPairs(withPayload, "doc_id", "payload",
+      minShared = 2L, maxDf = 100L, maxFrames = 64)
     assert(pairs.columns.toSeq === Seq("doc_a", "doc_b", "shared_frames"))
     assert(pairs.count() >= 0)
-    val fuzzy = Graft.videoNearDupPairsBanded(withPayload, minShared = 2L)
+    val fuzzy = MultiModal.videoNearDupPairsBanded(withPayload, "doc_id",
+      "payload", maxHamming = 2, minShared = 2L, maxDf = 100L,
+      maxFrames = 64)
     assert(fuzzy.columns.toSeq === Seq("doc_a", "doc_b", "shared_frames"))
     assert(fuzzy.count() >= pairs.count()) // superset of uncapped-exact-ish
-    // non-default maxFrames/maxDf must bind to the RIGHT params — an
-    // Int-to-Long widening once silently bound maxFrames to maxDf
-    // (r14 ADVICE); facade == operator with every dial non-default
-    val fz2 = Graft.videoNearDupPairsBanded(withPayload,
-      maxHamming = 1, minShared = 1L, maxDf = 7L, maxFrames = 5)
-    val op2 = graft.operators.MultiModal.videoNearDupPairsBanded(
-      withPayload, "doc_id", "payload",
-      maxHamming = 1, minShared = 1L, maxDf = 7L, maxFrames = 5)
-    assert(fz2.count() == op2.count())
-    assert(fz2.except(op2).isEmpty && op2.except(fz2).isEmpty)
-    val segs = Graft.videoSharedSegments(withPayload, minLen = 2L)
+    val segs = MultiModal.videoSharedSegments(withPayload, "doc_id",
+      "payload", minLen = 2L, maxDf = 100L, maxFrames = 64)
     assert(segs.columns.toSeq ===
       Seq("doc_a", "doc_b", "a_start", "b_start", "seg_len"))
     assert(segs.count() >= 0)
@@ -404,35 +421,34 @@ class FacadeSpec extends AnyFunSuite {
 
   test("phash store facades delegate") {
     val root = tmpRoot("facade_phash")
-    val sigs = graft.operators.MultiModal.imagePHashSignatures(
+    val sigs = MultiModal.imagePHashSignatures(
       docs.limit(60).select(col("doc_id"),
         graft.functions.SyntheticImage
           .syntheticImage(col("doc_id").cast("long"), col("text"))
           .as("payload")), "doc_id", "payload")
-    val n = Graft.phashStoreUpsert(sigs, root)
-    assert(n > 0 && Graft.phashStoreUpsert(sigs, root) == n)
-    val served = Graft.phashServe(sigs.select("doc_id", "ahash"), root)
+    val n = MultiModal.phashStoreUpsert(sigs, root)
+    assert(n > 0 && MultiModal.phashStoreUpsert(sigs, root) == n)
+    val served = MultiModal.phashServeNearDups(
+      sigs.select("doc_id", "ahash"), root, maxHamming = 2)
     assert(served.columns.toSeq ===
       Seq("query_id", "match_id", "hamming"))
     assert(served.count() >= n) // every stored doc self-matches at 0
-    Graft.phashPublishServeIndex(spark, root, nBuckets = 32, numFiles = 8)
-    val pruned = Graft.phashServePruned(
-      sigs.select("doc_id", "ahash"), root)
+    MultiModal.phashPublishServeIndex(spark, root, maxHamming = 2,
+      nBuckets = 32, numFiles = 8)
+    val pruned = MultiModal.phashServeNearDupsPruned(
+      sigs.select("doc_id", "ahash"), root, maxHamming = 2)
     assert(pruned.columns.toSeq ===
       Seq("query_id", "match_id", "hamming"))
     assert(pruned.count() == served.count()) // same contract, pruned read
-    assert(Graft.phashStoreDelete(
+    assert(MultiModal.phashStoreDelete(
       sigs.select("doc_id").limit(1), root) >= 0)
   }
 
   test("epochSchedule delegates") {
-    val got = Graft.epochSchedule(docs, budgetTokens = 3000L,
-      maxEpochs = 2)
+    val got = FeatureEng.epochSchedule(docs, "doc_id", "text", "source",
+      budgetTokens = 3000L, maxEpochs = 2, decayBp = 5000L)
     assert(got.columns.toSeq === Seq("doc_id", "source", "n_tokens",
       "epoch", "weight_bp"))
-    assert(got.collect().toSet ==
-      graft.operators.FeatureEng.epochSchedule(docs, "doc_id", "text",
-        "source", 3000L, 2).collect().toSet)
   }
 
   test("count-store retraction delegates: dsir/kn/bpe upsert -> retract -> never-ingested") {
@@ -441,24 +457,27 @@ class FacadeSpec extends AnyFunSuite {
     val shard = Seq((10L, "delta delta alpha")).toDF("doc_id", "text")
     val isT = col("doc_id") === 1L
     val dr = tmpRoot("facade_dsir_r")
-    Graft.dsirStoreBuild(base, isT, dr, nBuckets = 256)
-    assert(Graft.dsirStoreUpsert(shard, isT, dr, "s1"))
-    assert(Graft.dsirStoreRetract(shard, isT, dr, "s1"))
-    assert(Graft.dsirStoreFreeze(spark, dr) ==
-      graft.operators.Dsir.freezeModel(base, "doc_id", "text", isT,
-        256, 1.0))
+    Dsir.buildModelStore(base, "doc_id", "text", isT, dr, nBuckets = 256,
+      alpha = 1.0)
+    assert(Dsir.upsertModelCounts(shard, "doc_id", "text", isT, dr, "s1"))
+    assert(Dsir.retractModelCounts(shard, "doc_id", "text", isT, dr, "s1"))
+    assert(Dsir.freezeFromStore(spark, dr) ==
+      Dsir.freezeModel(base, "doc_id", "text", isT, 256, 1.0))
     val kr = tmpRoot("facade_kn_r")
-    Graft.knStoreBuild(base, kr)
-    assert(Graft.knStoreUpsert(shard, kr, "s1"))
-    assert(Graft.knStoreRetract(shard, kr, "s1"))
-    assert(Graft.knStoreFreeze(spark, kr).asMap ===
-      Graft.knFreeze(base).asMap)
+    TextAnalysis.knBuildStore(base, "doc_id", "text", kr, discount = 0.75)
+    assert(TextAnalysis.knUpsertCounts(shard, "doc_id", "text", kr, "s1"))
+    assert(TextAnalysis.knRetractCounts(shard, "doc_id", "text", kr, "s1"))
+    assert(TextAnalysis.knFreezeFromStore(spark, kr, maxTypes = 1000000)
+        .asMap ===
+      TextAnalysis.knFreeze(base, "doc_id", "text", discount = 0.75,
+        maxTypes = 1000000).asMap)
     val br = tmpRoot("facade_bpe_r")
-    Graft.bpeStoreBuild(base, br, nMerges = 5, minPairCount = 1L)
-    assert(Graft.bpeStoreUpsert(shard, br, "s1"))
-    assert(Graft.bpeStoreRetract(shard, br, "s1"))
+    Bpe.buildVocabStore(base, "doc_id", "text", br, nMerges = 5,
+      minPairCount = 1L)
+    assert(Bpe.upsertVocabCounts(shard, "doc_id", "text", br, "s1"))
+    assert(Bpe.retractVocabCounts(shard, "doc_id", "text", br, "s1"))
     val counts = graft.offline.VersionedStore
-      .read(spark, graft.operators.Bpe.vocabCountsTable(br))
+      .read(spark, Bpe.vocabCountsTable(br))
       .filter(col("cnt") > 0)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(!counts.contains("delta") && counts("alpha") === 2L)
@@ -467,81 +486,86 @@ class FacadeSpec extends AnyFunSuite {
   test("unigram family delegates: train/freeze/encode round-trip") {
     val corpus = Seq((1L, "aba ab aba ba b ab aba"),
       (2L, "ab aba ba ab")).toDF("doc_id", "text")
-    val model = Graft.unigramTrain(corpus, vocabSize = 6,
+    val model = Unigram.train(corpus, "doc_id", "text", vocabSize = 6,
       maxPieceLen = 3, rounds = 2)
-    val costs = Graft.unigramFreeze(model)
+    val costs = Unigram.collectCosts(model.vocab)
     assert(costs.nonEmpty && Set("a", "b").subsetOf(costs.keySet))
-    val enc = Graft.unigramEncode(corpus, costs, maxPieceLen = 3)
+    val enc = Unigram.encodeDocs(corpus, "doc_id", "text", costs,
+        maxPieceLen = 3)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     // piece boundaries may differ from word boundaries, but the
     // characters must round-trip exactly
     assert(enc(1L).replace(" ", "") ===
       "aba ab aba ba b ab aba".replace(" ", ""))
     assert(enc(2L).replace(" ", "") === "ab aba ba ab".replace(" ", ""))
-    val words = Graft.unigramEncodeWords(
+    val words = Unigram.encodeWords(
         Seq("aba", "ba").toDF("word"), costs, maxPieceLen = 3)
       .collect().map(r => r.getString(0) ->
         r.getAs[scala.collection.Seq[String]]("pieces").mkString("")).toMap
     assert(words === Map("aba" -> "aba", "ba" -> "ba"))
-    // sampled mode delegates; alpha 0 equals the exact encode
-    val s0 = Graft.unigramEncodeSampled(corpus, costs, maxPieceLen = 3,
-        alphaMicro = 0L, seed = 1L)
+    // sampled mode: alpha 0 equals the exact encode
+    val s0 = Unigram.encodeDocsSampled(corpus, "doc_id", "text", costs,
+        maxPieceLen = 3, alphaMicro = 0L, seed = 1L)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(s0 === enc)
-    // persisted-model delegates: refresh writes, store serves bit-equal
+    // persisted model: refresh writes, store serves bit-equal
     val root = tmpRoot("facade_uni_store")
-    Graft.bpeStoreBuild(corpus, root, nMerges = 5, minPairCount = 1L)
-    val m = Graft.unigramStoreRefresh(spark, root, vocabSize = 6,
+    Bpe.buildVocabStore(corpus, "doc_id", "text", root, nMerges = 5,
+      minPairCount = 1L)
+    val m = Unigram.refreshUnigram(spark, root, vocabSize = 6,
       maxPieceLen = 3, rounds = 2)
-    val (servedCosts, servedL) = Graft.unigramStoreModel(spark, root)
-    assert(servedL === 3 && servedCosts === Graft.unigramFreeze(m))
+    val (servedCosts, servedL) = Unigram.modelFromStore(spark, root)
+    assert(servedL === 3 && servedCosts === Unigram.collectCosts(m.vocab))
   }
 
   test("substr family delegates: spans/dedup, frozen strip, incremental + gram store") {
     val shared = "m1 m2 m3 m4 m5 m6 m7 m8 m9 m10"
     val corpus = Seq((1L, s"$shared tail"), (2L, shared))
       .toDF("doc_id", "text")
-    val spans = Graft.substrSpans(corpus).collect()
+    val spans = Dedup.exactSubstrSpans(corpus, "doc_id", "text", 3, 8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(spans === Set((2L, 1L, 10L)))
-    val deduped = Graft.substrDedup(corpus).collect()
+    val deduped = Dedup.exactSubstrDedup(corpus, "doc_id", "text", 3, 8).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(deduped(1L) === s"$shared tail" && deduped(2L) === "")
-    val frozen = Graft.substrFreeze(corpus, minDf = 2L)
+    val frozen = Dedup.freezeDupGrams(corpus, "doc_id", "text", 3, minDf = 2L)
     assert(frozen.nonEmpty)
-    val stripped = Graft.substrStripFrozen(
-        Seq((9L, s"x $shared y")).toDF("doc_id", "text"), frozen)
+    val stripped = Dedup.exactSubstrFrozen(
+        Seq((9L, s"x $shared y")).toDF("doc_id", "text"), "doc_id", "text",
+        frozen, 3)
       .head().getString(1)
     assert(stripped === "x y")
     val shard = Seq((10L, s"pre $shared")).toDF("doc_id", "text")
-    assert(Graft.substrSpansAgainst(corpus, shard).collect()
+    assert(Dedup.exactSubstrSpansAgainst(corpus, shard, "doc_id", "text",
+        3, 8).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((10L, 2L)))
-    assert(Graft.substrDedupAgainst(corpus, shard)
+    assert(Dedup.exactSubstrDedupAgainst(corpus, shard, "doc_id", "text",
+        3, 8)
       .head().getString(1) === "pre")
     val root = tmpRoot("facade_substr")
-    Graft.substrStoreBuild(corpus, root)
-    assert(Graft.substrStoreUpsert(
+    Dedup.buildSubstrStore(corpus, "doc_id", "text", root, 3)
+    assert(Dedup.upsertSubstrShard(
       Seq((20L, "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10")).toDF("doc_id", "text"),
-      root, "s1"))
-    val incr = Graft.substrSpansIncremental(
+      "doc_id", "text", root, "s1"))
+    val incr = Dedup.substrSpansIncremental(
         Seq((30L, "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10 end")).toDF("doc_id", "text"),
-        root)
+        "doc_id", "text", root, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(incr === Set((30L, 1L, 10L)))
-    assert(Graft.substrDedupIncremental(
+    assert(Dedup.substrDedupIncremental(
         Seq((30L, "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10 end")).toDF("doc_id", "text"),
-        root).head().getString(1) === "end")
-    assert(Graft.substrFreezeFromStore(spark, root, minDf = 1L).toSet ===
-      Graft.substrFreeze(corpus.unionByName(
+        "doc_id", "text", root, 8).head().getString(1) === "end")
+    assert(Dedup.freezeDupGramsFromStore(spark, root, minDf = 1L).toSet ===
+      Dedup.freezeDupGrams(corpus.unionByName(
           Seq((20L, "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10")).toDF("doc_id", "text")),
-        minDf = 1L).toSet)
-    // retraction delegates: the shard's grams subtract exactly
-    assert(Graft.substrStoreRetract(
+        "doc_id", "text", 3, minDf = 1L).toSet)
+    // retraction: the shard's grams subtract exactly
+    assert(Dedup.retractSubstrShard(
       Seq((20L, "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10")).toDF("doc_id", "text"),
-      root, "s1"))
-    assert(Graft.substrSpansIncremental(
+      "doc_id", "text", root, "s1"))
+    assert(Dedup.substrSpansIncremental(
         Seq((30L, "n1 n2 n3 n4 n5 n6 n7 n8 n9 n10 end")).toDF("doc_id", "text"),
-        root)
+        "doc_id", "text", root, 8)
       .count() === 0L)
   }
 
@@ -549,110 +573,92 @@ class FacadeSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sfDir)
     val emb = Tables.embeddings(spark, TestSpark.sfDir)
 
-    // doremi: facade == operator, pluggable excess path agrees
-    val w = Graft.doremiWeights(docs).collect()
+    // doremi: the pluggable excess path agrees with the one-call fit
+    val w = Doremi.domainWeights(docs, "doc_id", "text", "source",
+      etaMicro = 500000L, steps = 5, smoothMicro = 10000L).collect()
     assert(w.nonEmpty && w.forall(_.getAs[Long]("share_micro") > 0))
-    val viaExcess = Graft.doremiFromExcess(
-        graft.operators.Doremi.domainExcess(docs, "doc_id", "text",
-          "source"))
+    val viaExcess = Doremi.weightsFromExcess(
+        Doremi.domainExcess(docs, "doc_id", "text", "source"),
+        etaMicro = 500000L, steps = 5, smoothMicro = 10000L)
       .select("source", "share_micro").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(w.map(r => r.getString(0) ->
       r.getAs[Long]("share_micro")).toMap === viaExcess)
-    val mix = Graft.doremiMix(docs)
+    val mix = Doremi.domainMixLearned(docs, "doc_id", "text", "source",
+      etaMicro = 500000L, steps = 5, smoothMicro = 10000L)
     assert(mix.count() > 0)
 
     // kmeans: fit → save → load bit-equal; assignment via the loaded
     // model matches the direct one
-    val km = Graft.kmeansFit(emb, k = 4, dim = 64, iters = 2)
+    val km = Kmeans.fit(emb, "vec_id", "embedding", k = 4, dim = 64,
+      iters = 2)
     val tmp = java.nio.file.Files.createTempDirectory("km_store").toString
-    Graft.kmeansSave(spark, km, s"$tmp/km")
-    val kmLoaded = Graft.kmeansLoad(spark, s"$tmp/km")
+    Kmeans.saveModel(spark, km, s"$tmp/km")
+    val kmLoaded = Kmeans.modelFromStore(spark, s"$tmp/km")
     assert(kmLoaded.k === km.k && kmLoaded.dim === km.dim)
     assert(kmLoaded.centroids.toSeq === km.centroids.toSeq)
-    val a1 = Graft.kmeansAssign(emb, km).collect()
+    val a1 = Kmeans.assign(emb, "vec_id", "embedding", km).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val a2 = Graft.kmeansAssign(emb, kmLoaded).collect()
+    val a2 = Kmeans.assign(emb, "vec_id", "embedding", kmLoaded).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(a1 === a2)
-    assert(Graft.kmeansBalance(docs, emb, k = 4, dim = 64).count() > 0)
+    assert(Kmeans.clusterBalance(docs, "doc_id", "text", emb, "vec_id",
+      "embedding", k = 4, dim = 64, iters = 3).count() > 0)
 
     // multiclass ft: train → save → load bit-equal; stored scorer ==
     // in-memory scorer
     val seed = docs.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"), col("lang"))
-    val mc = Graft.ftLangidTrain(seed, "lang", nBuckets = 256, dim = 4,
-      epochs = 4)
-    Graft.ftMcModelSave(spark, mc, s"$tmp/ftmc")
-    val mcLoaded = Graft.ftMcModelLoad(spark, s"$tmp/ftmc")
+    val mc = FtClassify.trainMc(seed, "doc_id", "text", "lang",
+      nBuckets = 256, dim = 4, epochs = 4, lrMicro = 16000000L,
+      maxClasses = 256)
+    FtClassify.saveModelMc(spark, mc, s"$tmp/ftmc")
+    val mcLoaded = FtClassify.modelMcFromStore(spark, s"$tmp/ftmc")
     assert(mcLoaded.labels.toSeq === mc.labels.toSeq)
     assert(mcLoaded.emb.toSeq === mc.emb.toSeq)
     assert(mcLoaded.w.toSeq === mc.w.toSeq)
     assert(mcLoaded.bMicro.toSeq === mc.bMicro.toSeq)
-    val s1 = Graft.ftLangidScore(docs, mc).collect()
+    val s1 = FtClassify.scoreFrozenMc(docs, "doc_id", "text", mc).collect()
       .map(r => r.getLong(0) -> r.getString(4)).toMap
-    val s2 = Graft.ftLangidScore(docs, mcLoaded).collect()
+    val s2 = FtClassify.scoreFrozenMc(docs, "doc_id", "text", mcLoaded)
+      .collect()
       .map(r => r.getLong(0) -> r.getString(4)).toMap
     assert(s1 === s2)
   }
 
   test("round-13 facades delegate: md5 minhash, gram vectors, tiered assign/dedup, refresh stores, ccnet, curriculum, rekeyed pack") {
-    import graft.operators.{Dedup, FtClassify, Kmeans, TextAnalysis}
     val docs = Tables.documents(spark, TestSpark.sfDir)
     val emb = Tables.embeddings(spark, TestSpark.sfDir)
-    // dedup families delegate with identical outputs
-    assert(Graft.dedupMinhashMd5(docs, threshold = 0.8).collect().toSet
-      == Dedup.minhashMd5Pairs(docs, "doc_id", "text", 3, 16, 4, 0.8)
-        .collect().toSet)
-    assert(Graft.gramPairs(docs, threshold = 0.9).collect().toSet
-      == Dedup.gramProjectPairs(docs, "doc_id", "text", 3, 16, 0.9)
-        .collect().toSet)
-    assert(Graft.gramVectors(docs).count()
-      == Dedup.gramProjectVectors(docs, "doc_id", "text", 3, 16).count())
-    // tiered assignment / dedup: full probe == the exact facades
-    val km = Graft.kmeansFit(emb, k = 4, dim = 64, iters = 2)
-    assert(Graft.kmeansAssignTiered(emb, km, nCoarse = 2, nProbe = 2)
+    // tiered assignment / dedup: full probe == the exact operators
+    val km = Kmeans.fit(emb, "vec_id", "embedding", k = 4, dim = 64,
+      iters = 2)
+    assert(Kmeans.assignTiered(emb, "vec_id", "embedding", km,
+        nCoarse = 2, nProbe = 2)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      == Graft.kmeansAssign(emb, km).collect()
+      == Kmeans.assign(emb, "vec_id", "embedding", km).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap)
-    assert(Graft.kmeansDedupTiered(emb, 4, 64, 2, 0.985, 2, 2)
-        .collect().toSet
-      == Graft.kmeansDedup(emb, 4, 64, 2, 0.985).collect().toSet)
-    // refresh stores round-trip through the facades
+    assert(Kmeans.semdedupPairsTiered(emb, "vec_id", "embedding", 4, 64, 2,
+        0.985, 2, 2).collect().toSet
+      == Kmeans.semdedupPairs(emb, "vec_id", "embedding", 4, 64, 2, 0.985)
+        .collect().toSet)
+    // refresh stores round-trip
     val tmp = java.nio.file.Files.createTempDirectory("r13fac").toString
-    Graft.kmeansRefreshInit(spark, km, s"$tmp/km")
-    assert(Graft.kmeansStatsUpsert(emb, s"$tmp/km", "s1"))
-    val kr = Graft.kmeansRefresh(spark, s"$tmp/km", maxDrift = 0.0)
+    Kmeans.initRefreshStore(spark, km, s"$tmp/km")
+    assert(Kmeans.upsertAssignStats(emb, "vec_id", "embedding", s"$tmp/km",
+      "s1"))
+    val kr = Kmeans.refreshCentroids(spark, s"$tmp/km", maxDrift = 0.0)
     assert(kr.retrained || kr.drift == 0.0)
-    assert(Graft.kmeansStatsRetract(spark, s"$tmp/km", "s1"))
+    assert(Kmeans.retractAssignStats(spark, s"$tmp/km", "s1"))
     val seed = docs.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"), col("lang"))
-    val m0 = Graft.ftMcRefreshInit(seed, "lang", s"$tmp/ft",
-      nBuckets = 256, dim = 4, epochs = 3)
-    assert(Graft.ftMcSeedUpsert(seed, "lang", s"$tmp/ft") > 0)
-    val fr = Graft.ftMcRefresh(spark, s"$tmp/ft")
+    val m0 = FtClassify.initRefreshStoreMc(seed, "doc_id", "text", "lang",
+      s"$tmp/ft", nBuckets = 256, dim = 4, epochs = 3, lrMicro = 16000000L)
+    assert(FtClassify.upsertSeedDocsMc(seed, "doc_id", "text", "lang",
+      s"$tmp/ft") > 0)
+    val fr = FtClassify.refreshMc(spark, s"$tmp/ft", maxDrift = 0.1)
     assert(!fr.retrained && fr.model.emb.toSeq === m0.emb.toSeq)
-    // one-plan pipelines delegate
-    assert(Graft.ccnetPipeline(docs).collect().toSet
-      == TextAnalysis.ccnetPipeline(docs, "doc_id", "text")
-        .collect().toSet)
-    assert(Graft.ccnetPipelineFt(docs, m0).collect().toSet
-      == TextAnalysis.ccnetPipelineFt(docs, "doc_id", "text", m0)
-        .collect().toSet)
-    val q = TextAnalysis.quality(docs, "doc_id", "text")
-      .select(col("doc_id"), col("quality_score"), col("n_words"))
-    assert(Graft.curriculumPack(q, "quality_score", "n_words", 512L)
-        .collect().toSet
-      == graft.operators.FeatureEng.curriculumPack(q, "doc_id",
-        "quality_score", "n_words", 512L).collect().toSet)
-    assert(Graft.inContextPackRekeyed(docs, emb, k = 2, dim = 64,
-      iters = 1, seqLen = 256L).count() > 0)
-    // late-round facades: soft dedup + length batching delegate
-    assert(Graft.softDedupWeights(docs).collect().toSet
-      == Dedup.softDedupWeights(docs, "doc_id", "text").collect().toSet)
-    assert(Graft.lengthBatches(docs, nBuckets = 4, batchSize = 16)
-        .collect().toSet
-      == graft.operators.FeatureEng.lengthBatches(docs, "doc_id",
-        "text", 4, 16).collect().toSet)
+    assert(Kmeans.inContextPackRekeyed(docs, "doc_id", "text", emb,
+      "vec_id", "embedding", k = 2, dim = 64, iters = 1, seqLen = 256L)
+      .count() > 0)
   }
 }

@@ -1628,16 +1628,16 @@ class LlmPipelineSpec extends AnyFunSuite {
     val prunedBefore = servedFiles().size
     // a wide upsert: vectors landing in MANY cells -> one merge commit
     // whose new files span the cell range and are never pruned
-    Graft.annIvfUpsert(
+    Ann.ivfIndexUpsert(
       emb.filter($"vec_id" >= 100 && $"vec_id" < 200)
         .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"),
-      indexRoot)
+      indexRoot, "vec_id", "embedding")
     val prunedAfterUpsert = servedFiles().size
     assert(prunedAfterUpsert > prunedBefore,
       s"merge-written files should defeat pruning until compaction " +
         s"($prunedBefore -> $prunedAfterUpsert)")
     val afterUpsert = result()
-    Graft.annIvfCompact(spark, indexRoot, nFiles = 8)
+    Ann.ivfIndexCompact(spark, indexRoot, nFiles = 8, sq8 = false)
     assert(servedFiles().size <= prunedBefore + 1,
       "cell-sorted compaction must restore ~per-cell file pruning")
     assert(result() == afterUpsert,

@@ -7,12 +7,12 @@ import graft.operators.Search
 
 /** [[Search.micros6]] — the BigDecimal-free fast path for
   * `(round(x, 6) * 1e6 + 0.5).cast(long)` — must be VALUE-IDENTICAL
-  * to that reference expression everywhere in its non-negative
-  * domain. The sweep concentrates on the only place the fast path
-  * could diverge: the half-up tie neighborhood (x·1e6 near N + 0.5),
-  * including exact binary-fraction ties, the ±1e-3 guard-band edges,
-  * and the large-x region where the fast path must defer to the
-  * BigDecimal branch (x·1e6 ≥ 1e10).
+  * to that reference expression for every double. The sweep
+  * concentrates on the places the fast path could diverge: the
+  * half-up tie neighborhood (x·1e6 near N + 0.5), including exact
+  * binary-fraction ties, the ±1e-3 guard-band edges, the large-x
+  * region where the fast path must defer to the BigDecimal branch
+  * (x·1e6 ≥ 1e10), and negative x, which must defer too.
   */
 class MicrosRound6Spec extends AnyFunSuite {
 
@@ -42,7 +42,10 @@ class MicrosRound6Spec extends AnyFunSuite {
       n <- micros; o <- offs; s <- Seq(1.0, -1.0)
       v = (n + 0.5 + s * o) / 1e6 if v >= 0.0
     } yield v
-    check(xs, "tie sweep")
+    // the mirror image below zero: floor(x·1e6 + 0.5) rounds -1.2e-6
+    // to -1 where the reference (half away from zero, then a
+    // truncating cast) gives 0
+    check(xs ++ xs.map(-_) :+ -1.2e-6, "tie sweep")
   }
 
   test("exact binary-fraction ties (x*1e6 exactly N + 0.5)") {

@@ -1163,10 +1163,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(expect.nonEmpty && expect.size < (b1 ++ b2).size,
       "fixture must exercise every stage")
 
-    // streamed chain via the FACADE, arrivals in id order (batch
-    // keep-min == first-arrival)
+    // streamed chain, arrivals in id order (batch keep-min ==
+    // first-arrival)
     val input = MemoryStream[(Long, String)]
-    val q = Graft.curateStream(
+    val q = graft.streaming.StreamingCurate.curate(
         input.toDF().toDF("doc_id", "text"), vocab, total, th,
         evalShingles, shingleN = 3, minOverlap = 1L)
       .writeStream.format("memory").queryName("curate_stream")

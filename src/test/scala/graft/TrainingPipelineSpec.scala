@@ -71,7 +71,8 @@ class TrainingPipelineSpec extends AnyFunSuite {
     assert(docs.count() == n)
 
     // 1. doc-level dedup: the production keep list (exact → LSH → verify)
-    val kept = Graft.dedupKeepList(docs)
+    val kept = Dedup.keepList(docs, "doc_id", "text", n = 3,
+      threshold = 0.8, maxDf = 0, exact = false)
     val keptDocs = docs.join(kept, Seq("doc_id"), "left_semi")
     assert(kept.count() <= n && kept.count() > 0)
 
